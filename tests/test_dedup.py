@@ -38,6 +38,41 @@ def test_exact_dedup_groups_identical_texts(spark):
     assert sum(out.values()) == 6
 
 
+def test_exact_dedup_keeps_distinct_cyrillic_docs(spark, tmp_path):
+    """The canonical form keeps Unicode letters: two distinct Russian
+    documents must not share a fingerprint (an ASCII-only canonical form
+    maps both to md5("") and merges them), while case and punctuation
+    variants of one document still do. The same fingerprint decides the
+    zero-gram verify of dedup_increment, so distinct short Russian docs
+    must both survive there too."""
+    from uma_etl_iis_loader_spark.operators.dedup import (
+        build_minhash_index,
+        dedup_increment,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (1, "Привет, мир!"),
+            (2, "Добрый вечер"),
+            (3, "привет   мир"),
+        ],
+        "doc_id long, text string",
+    )
+    out = {r.keep_id: r.dup_count for r in exact_dedup(docs).collect()}
+    assert out == {1: 2, 2: 1}
+
+    idx = str(tmp_path / "idx")
+    short = spark.createDataFrame([(10, "да")], "doc_id long, text string")
+    build_minhash_index(short, idx, num_hashes=16, bands=4)
+    shard = spark.createDataFrame(
+        [(11, "ну"), (12, "ДА")], "doc_id long, text string"
+    )
+    got = dedup_increment(
+        shard, idx, num_hashes=16, bands=4, update_index=False
+    )
+    assert {r.doc_id for r in got["survivors"].collect()} == {11}
+
+
 def test_ngram_jaccard_finds_near_dups(spark):
     pairs = {
         (r.id_a, r.id_b)
@@ -48,6 +83,23 @@ def test_ngram_jaccard_finds_near_dups(spark):
     assert not any(4 in p or 5 in p for p in pairs)
 
 
+def _path_plans(docs, threshold):
+    """The two lazy ngram_jaccard_pairs path builders over one gram
+    table: (naive inverted-index join, PPJoin prefix filter)."""
+    from uma_etl_iis_loader_spark.operators.dedup import (
+        _df_ordered_grams,
+        _gram_table,
+        _naive_pairs,
+        _prefix_pairs,
+    )
+
+    g = _gram_table(docs, "doc_id", "text", 3, False)
+    return (
+        _naive_pairs(g, threshold),
+        _prefix_pairs(_df_ordered_grams(g), threshold),
+    )
+
+
 def test_prefix_filter_matches_naive_inverted_index(spark, sf_dir):
     """PPJoin prefix-filtered path must return EXACTLY the naive join's
     pairs — on the hand-built corpus and on the real documents fixture."""
@@ -55,19 +107,10 @@ def test_prefix_filter_matches_naive_inverted_index(spark, sf_dir):
         (_docs(spark), 0.5),
         (read_fixture(spark, sf_dir, "documents"), 0.35),
     ]:
-        fast = {
-            (r.id_a, r.id_b)
-            for r in ngram_jaccard_pairs(
-                docs, n=3, threshold=t, prefix_filter=True
-            ).collect()
-        }
-        naive = {
-            (r.id_a, r.id_b)
-            for r in ngram_jaccard_pairs(
-                docs, n=3, threshold=t, prefix_filter=False
-            ).collect()
-        }
-        assert fast == naive
+        naive, fast = _path_plans(docs, t)
+        assert set(map(tuple, fast.collect())) == set(
+            map(tuple, naive.collect())
+        )
 
 
 def test_minhash_lsh_matches_exact_jaccard(spark):
@@ -95,7 +138,7 @@ def test_minhash_lsh_matches_exact_jaccard(spark):
 def _docs_with_empties(spark):
     """_docs plus zero-gram documents (empty / shorter than n): they
     share the sentinel MinHash signature, so they bucket-collide with
-    each other — the verify strategies must agree on dropping them."""
+    each other — operator and reference must agree on dropping them."""
     rows = [(7, ""), (8, "ab"), (9, ""), (10, None)]
     return _docs(spark).unionByName(
         spark.createDataFrame(rows, "doc_id long, text string")
@@ -103,19 +146,21 @@ def _docs_with_empties(spark):
 
 
 def test_minhash_lsh_grouped_equals_join_verify(spark):
-    """LAW: the grouped (per-bucket Arrow kernel) and join (candidate
-    pair join) verify strategies emit the IDENTICAL pair set — including
-    on zero-gram docs, where grouped filters the sentinel bucket before
-    bucketing and join drops the same pairs via 0/0→NULL Jaccard."""
+    """LAW: the per-bucket Arrow verify emits the IDENTICAL pair set as
+    the candidate-pair-join reference (tests/dedup_reference.py) —
+    including on zero-gram docs, where the operator filters the sentinel
+    bucket before bucketing and the reference drops the same pairs via
+    0/0→NULL Jaccard."""
+    from dedup_reference import minhash_join_verify_pairs
+
     docs = _docs_with_empties(spark)
     kw = dict(num_hashes=64, bands=16, n=5, threshold=0.5, char_level=True)
     grouped = {
-        (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(docs, verify="grouped", **kw).collect()
+        (r.id_a, r.id_b) for r in minhash_lsh_pairs(docs, **kw).collect()
     }
     join = {
         (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(docs, verify="join", **kw).collect()
+        for r in minhash_join_verify_pairs(docs, **kw).collect()
     }
     assert grouped == join and len(grouped) > 0
     # no sentinel pairs: empty docs never pair under either strategy
@@ -143,12 +188,15 @@ def _persistent_rdd_ids(spark) -> set[int]:
     return {int(k) for k in m.keySet().toArray()}
 
 
+def _cache_manager_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_minhash_lsh_pin_releases_both_caches(spark):
-    """pin=True must unpersist BOTH internal caches (signature frame +
-    grouped-mode collision-stats frame): the only NEW persisted RDD
-    after the call is the localCheckpoint of the pair output itself.
-    pin=False leaves both persisted (the lazy plan references them) —
-    documented cache-lifetime contract in the docstring.
+    """Both internal caches (signature frame + collision-stats frame)
+    are released before the call returns: the only NEW persisted RDD
+    after the call is the localCheckpoint of the pair output itself, and
+    the session's CacheManager holds nothing.
 
     Accounting diffs persistent-RDD ID SETS rather than totals: in a
     shared long-suite session the ContextCleaner unpersists earlier
@@ -158,16 +206,29 @@ def test_minhash_lsh_pin_releases_both_caches(spark):
     spark.catalog.clearCache()
     before = _persistent_rdd_ids(spark)
     out = minhash_lsh_pairs(_docs(spark), num_hashes=64, bands=16, n=5,
-                            threshold=0.5, pin=True)
-    new_pinned = _persistent_rdd_ids(spark) - before
-    assert len(new_pinned) == 1  # checkpoint only
-    out.count()
-    lazy = minhash_lsh_pairs(_docs(spark), num_hashes=64, bands=16, n=5,
-                             threshold=0.5, pin=False)
-    new_lazy = _persistent_rdd_ids(spark) - before - new_pinned
-    assert len(new_lazy) == 2  # sigs + bstats stay persisted
-    lazy.count()
-    spark.catalog.clearCache()  # the documented release path
+                            threshold=0.5)
+    assert len(_persistent_rdd_ids(spark) - before) == 1  # checkpoint only
+    assert _cache_manager_empty(spark)
+    assert out.count() > 0
+
+
+def test_failing_action_releases_caches(spark):
+    """A raise inside the operators' own actions (here: the gram UDF
+    meeting an integer text column) must not leave cached intermediates
+    behind in the session — the prefix-filter Jaccard path and MinHash
+    LSH each hold caches across an action that fails."""
+    import pytest
+
+    spark.catalog.clearCache()
+    bad = spark.createDataFrame(
+        [(1, 11), (2, 22), (3, 33)], "doc_id long, text long"
+    )
+    with pytest.raises(Exception):
+        ngram_jaccard_pairs(bad, threshold=0.7)
+    assert _cache_manager_empty(spark)
+    with pytest.raises(Exception):
+        minhash_lsh_pairs(bad)
+    assert _cache_manager_empty(spark)
 
 
 def test_minhash_lsh_chained_subset_and_closure(spark):
@@ -202,16 +263,14 @@ def test_minhash_lsh_chained_subset_and_closure(spark):
 def test_minhash_lsh_candidate_budget_guard(spark):
     """max_candidate_pairs raises BEFORE verify work with the measured
     mass and the banding recipe; a sufficient budget (and the chaining-
-    adjusted mass) passes. Covers both verify strategies."""
+    adjusted mass) passes."""
     import pytest
 
     docs = _docs(spark)
     kw = dict(num_hashes=64, bands=16, n=5, threshold=0.5, char_level=True)
-    for strategy in ("grouped", "join"):
-        with pytest.raises(RuntimeError, match="16 bands x 4 rows"):
-            minhash_lsh_pairs(
-                docs, verify=strategy, max_candidate_pairs=1, **kw
-            )
+    with pytest.raises(RuntimeError, match="16 bands x 4 rows"):
+        minhash_lsh_pairs(docs, max_candidate_pairs=1, **kw)
+    assert _cache_manager_empty(spark)  # the guard's raise releases caches
     # generous budget: runs to completion
     assert (
         minhash_lsh_pairs(docs, max_candidate_pairs=10_000, **kw).count() > 0
@@ -302,79 +361,63 @@ def test_fixture_dedup_runs(spark, sf_dir):
 
 def test_embedding_cosine_tiled_matches_crossjoin(spark, sf_dir):
     """The tiled block-matmul self-join is EXACT: identical pair set to
-    the crossJoin path on the embeddings fixture, at a mid threshold
+    the crossJoin reference (tests/dedup_reference.py) on the
+    embeddings fixture, at a mid threshold
     where qualifying pairs sit barely above t (the regime where LSH
     cannot be used and the exact path must carry the load)."""
+    from dedup_reference import crossjoin_cosine_pairs
+
     from uma_etl_iis_loader_spark.operators.dedup import embedding_cosine_pairs
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    exact = {
+        (r.id_a, r.id_b)
+        for r in crossjoin_cosine_pairs(emb, threshold=0.45).collect()
+    }
     for blocks in (1, 4, 8):
         tiled = {
             (r.id_a, r.id_b)
             for r in embedding_cosine_pairs(
-                emb, threshold=0.45, method="tiled", blocks=blocks
-            ).collect()
-        }
-        exact = {
-            (r.id_a, r.id_b)
-            for r in embedding_cosine_pairs(
-                emb, threshold=0.45, method="crossjoin"
+                emb, threshold=0.45, blocks=blocks
             ).collect()
         }
         assert tiled == exact, blocks
         assert all(a < b for a, b in tiled)
 
 
-def test_embedding_cosine_srp_no_false_positives(spark, sf_dir):
-    """The SRP-banded high-threshold path verifies candidates with exact
-    cosine, so its output must be a SUBSET of the exact pair set (LSH
-    only bounds recall, never adds false positives)."""
-    from uma_etl_iis_loader_spark.operators.dedup import embedding_cosine_pairs
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    srp = {
-        (r.id_a, r.id_b)
-        for r in embedding_cosine_pairs(
-            emb, threshold=0.45, method="srp", srp_bits=64, srp_bands=16, d=64
-        ).collect()
-    }
-    exact = {
-        (r.id_a, r.id_b)
-        for r in embedding_cosine_pairs(
-            emb, threshold=0.45, method="crossjoin"
-        ).collect()
-    }
-    assert srp <= exact
-    # wide-band family on this corpus still recovers most true pairs
-    assert len(srp) >= 0.5 * len(exact)
-
-
-def test_adaptive_path_selection(spark, sf_dir):
-    """prefix_filter=None picks the naive inverted-index join below the
-    threshold cutoff and PPJoin prefix filtering at/above it — pinned by
-    plan shape: the prefix path carries the df-ordering aggregate (a
-    collect_list over the (df, gram) order), the naive path does not."""
-    from uma_etl_iis_loader_spark.io import read_fixture
-    from uma_etl_iis_loader_spark.operators.dedup import (
-        PREFIX_FILTER_MIN_THRESHOLD,
-        ngram_jaccard_pairs,
-    )
+def test_adaptive_path_selection(spark, sf_dir, monkeypatch):
+    """The threshold picks the naive inverted-index join below the
+    cutoff and PPJoin prefix filtering at/above it — pinned by which
+    builder runs and by plan shape: the prefix path carries the
+    df-ordering aggregate (a collect_list over the (df, gram) order),
+    the naive path does not."""
+    from uma_etl_iis_loader_spark.operators import dedup
 
     docs = read_fixture(spark, sf_dir, "documents")
-    lo = ngram_jaccard_pairs(docs, n=3, threshold=0.35, pin=False)
-    hi = ngram_jaccard_pairs(docs, n=3, threshold=0.7, pin=False)
-    assert 0.35 < PREFIX_FILTER_MIN_THRESHOLD <= 0.7
-    lo_plan = lo._jdf.queryExecution().optimizedPlan().toString()
-    hi_plan = hi._jdf.queryExecution().optimizedPlan().toString()
+    built = []
+    for name in ("_naive_pairs", "_prefix_pairs"):
+        real = getattr(dedup, name)
+
+        def spy(*a, _name=name, _real=real):
+            built.append(_name)
+            return _real(*a)
+
+        monkeypatch.setattr(dedup, name, spy)
+    assert 0.35 < dedup.PREFIX_FILTER_MIN_THRESHOLD <= 0.7
+    hi = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.7)
+    dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.35)
+    assert built == ["_prefix_pairs", "_naive_pairs"]
+    monkeypatch.undo()
+
+    naive, prefix = _path_plans(docs, 0.7)
+    naive_plan = naive._jdf.queryExecution().optimizedPlan().toString()
+    prefix_plan = prefix._jdf.queryExecution().optimizedPlan().toString()
     # the prefix path's signature operator: df-ordered gram reassembly
-    assert "collect_list" not in lo_plan  # naive: no ordering aggregate
-    assert "collect_list" in hi_plan  # prefix: (df, gram) reassembly
-    # and both paths stay exact: adaptive output == forced-naive output
-    hi_naive = ngram_jaccard_pairs(
-        docs, n=3, threshold=0.7, prefix_filter=False, pin=False
-    )
+    assert "collect_list" not in naive_plan  # naive: no ordering aggregate
+    assert "collect_list" in prefix_plan  # prefix: (df, gram) reassembly
+    # and both paths stay exact: adaptive output == naive output
     assert sorted(map(tuple, hi.collect())) == sorted(
-        map(tuple, hi_naive.collect())
+        map(tuple, naive.collect())
     )
 
 
@@ -451,38 +494,11 @@ def test_deduplicate_corpus_keeps_one_per_component(spark):
     assert kept == [1, 4, 5, 7]
 
 
-def test_star_contraction_equals_propagation(spark):
-    """connected_components_star (large-star/small-star contraction — the
-    giant-component path) must produce exactly the labeling of the
-    propagation method (itself union-find-verified) on randomized graphs
-    plus a high-diameter chain."""
-    import random
-
-    from uma_etl_iis_loader_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    rng = random.Random(23)
-    edges = list({(rng.randrange(150), rng.randrange(150)) for _ in range(120)})
-    edges = [(a, b) for a, b in edges if a != b]
-    edges += [(i, i + 1) for i in range(200, 260)]  # diameter-60 chain
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    a = sorted(map(tuple, connected_components(pairs).collect()))
-    b = sorted(map(tuple, connected_components_star(pairs).collect()))
-    assert a == b
-    empty = connected_components_star(
-        spark.createDataFrame([], "id_a long, id_b long")
-    )
-    assert empty.columns == ["node", "comp"] and empty.count() == 0
-
-
 def test_connected_components_string_ids(spark):
     """Ids keep their input type — string/UUID doc ids must cluster, not
     silently cast to NULL (which would make deduplicate_corpus a no-op)."""
     from uma_etl_iis_loader_spark.operators.dedup import (
         connected_components,
-        connected_components_star,
         deduplicate_corpus,
     )
 
@@ -491,7 +507,6 @@ def test_connected_components_string_ids(spark):
     )
     exp = [("aa", "aa"), ("bb", "aa"), ("cc", "aa"), ("xx", "xx"), ("yy", "xx")]
     assert sorted(map(tuple, connected_components(pairs).collect())) == exp
-    assert sorted(map(tuple, connected_components_star(pairs).collect())) == exp
     docs = spark.createDataFrame(
         [(i, f"t{i}") for i in ["aa", "bb", "cc", "xx", "yy", "zz"]],
         "doc_id string, text string",

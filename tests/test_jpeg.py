@@ -264,3 +264,26 @@ def test_quant_cache_is_immutable_and_hits():
     assert not a[0].flags.writeable and not a[1].flags.writeable
     with pytest.raises(ValueError):
         a[0][0, 0] = 99
+
+
+def test_jpeg_decode_cost_per_byte_flat():
+    """Decode cost per scan byte must not grow with the payload: the
+    bit reader's accumulator is masked to the bits still unconsumed, so
+    each shift is O(1). Unmasked, a 256² noise image cost ~17x more per
+    byte than a 64² one (O(N²) decode). Best-of-N timings keep the ratio
+    robust to a noisy host."""
+    import time
+
+    def us_per_byte(side: int) -> float:
+        rng = np.random.default_rng(side)
+        img = rng.integers(0, 256, (side, side, 3), dtype=np.uint8)
+        payload = encode_jpeg(img, quality=95)
+        best = float("inf")
+        for _ in range(3):
+            t0 = time.perf_counter()
+            decode_jpeg(payload)
+            best = min(best, time.perf_counter() - t0)
+        return best * 1e6 / len(payload)
+
+    small, large = us_per_byte(64), us_per_byte(256)
+    assert large / small < 3.0, (small, large)

@@ -143,25 +143,6 @@ def test_passages_increment_chained_shards(spark):
     assert spans == [(20, 0, 9)]
 
 
-def test_passages_increment_guards_lazy_update(spark):
-    import tempfile
-
-    import pytest
-
-    from uma_etl_iis_loader_spark.operators.passages import (
-        build_shingle_index,
-        passages_increment,
-    )
-
-    df = spark.createDataFrame(
-        [(1, " ".join(f"x{i}" for i in range(12)))], "doc_id long, text string"
-    )
-    idx = tempfile.mkdtemp(prefix="shingle_idx3_") + "/idx"
-    build_shingle_index(df, idx, k=8)
-    with pytest.raises(ValueError, match="pin=True"):
-        passages_increment(df, idx, k=8, update_index=True, pin=False)
-
-
 def test_compact_shingle_index_preserves_answers(spark):
     import tempfile
 

@@ -76,9 +76,24 @@ def test_window_sorts_within_single_partition_exchange(spark, sf_dir):
 
 
 def test_ngram_jaccard_no_cartesian(spark, sf_dir):
-    plan = _plan(spark, "dedup_ngram_jaccard", sf_dir)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    """Both ngram_jaccard_pairs paths join on grams, never cartesian.
+    Asserted on the lazy path builders: the operator itself returns a
+    checkpointed frame whose plan no longer shows the joins."""
+    from uma_etl_iis_loader_spark.io import read_fixture
+    from uma_etl_iis_loader_spark.operators.dedup import (
+        _df_ordered_grams,
+        _gram_table,
+        _naive_pairs,
+        _prefix_pairs,
+    )
+
+    g = _gram_table(
+        read_fixture(spark, sf_dir, "documents"), "doc_id", "text", 3, False
+    )
+    for df in (_naive_pairs(g, 0.35), _prefix_pairs(_df_ordered_grams(g), 0.7)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_tiled_cosine_single_shuffle_no_cartesian(spark, sf_dir):
@@ -95,7 +110,6 @@ def test_tiled_cosine_single_shuffle_no_cartesian(spark, sf_dir):
     df = embedding_cosine_pairs(
         read_fixture(spark, sf_dir, "embeddings"),
         threshold=0.45,
-        method="tiled",
         blocks=8,
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -311,10 +325,15 @@ def test_repeated_passages_hashed_path_plan(spark, sf_dir):
     8-byte hash keys (no string shingle column survives into the
     exchange)."""
     from uma_etl_iis_loader_spark.io import read_fixture
-    from uma_etl_iis_loader_spark.operators.passages import repeated_passages
+    from uma_etl_iis_loader_spark.operators.passages import (
+        _marked_to_outputs,
+        _repeated_marks,
+        shingle_positions,
+    )
 
     docs = read_fixture(spark, sf_dir, "documents")
-    out = repeated_passages(docs, k=8, hashed=True, pin=False)
+    sh = shingle_positions(docs, k=8, hashed=True)
+    out = _marked_to_outputs(_repeated_marks(sh, 2), 8)
     plan = out["stats"]._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

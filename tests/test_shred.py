@@ -124,3 +124,16 @@ def test_backfill_student_counts(spark):
     got = {(r.entity_name, r.number_of_students) for r in backfill_student_counts(docs).collect()}
     # min positive count across lessons naming the own group (25 < 28)
     assert got == {("253501", 25)}
+
+
+def test_shred_parses_each_payload_once(spark):
+    """parse_schedule_json's explode(array(from_json(...))) barrier keeps
+    Catalyst from splitting the parse into one schema-pruned from_json per
+    extracted field: the optimized plan of parse → shred holds exactly
+    one JsonToStructs."""
+    docs, _ = _docs_df(spark)
+    plan = (
+        shred_schedule_docs(docs)._jdf.queryExecution().optimizedPlan().toString()
+    )
+    # a JsonToStructs expression prints as from_json(...)
+    assert plan.count("from_json(") == 1, plan

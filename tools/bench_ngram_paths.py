@@ -24,7 +24,13 @@ REPEATS = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 
 def main() -> None:
     from uma_etl_iis_loader_spark.io import read_fixture
-    from uma_etl_iis_loader_spark.operators.dedup import ngram_jaccard_pairs
+    from uma_etl_iis_loader_spark.operators.dedup import (
+        _df_ordered_grams,
+        _gram_table,
+        _naive_pairs,
+        _prefix_pairs,
+    )
+    from uma_etl_iis_loader_spark.operators.lifetime import persisted
     from uma_etl_iis_loader_spark.session import build_session
 
     spark = build_session("bench-ngram")
@@ -32,26 +38,24 @@ def main() -> None:
     docs = read_fixture(spark, SF_DIR, "documents").cache()
     docs.count()
 
+    def run(threshold: float, prefix: bool) -> int:
+        # the same hold/materialize discipline ngram_jaccard_pairs
+        # applies to the path its threshold selects
+        g = _gram_table(docs, "doc_id", "text", 3, False)
+        held = _df_ordered_grams(g) if prefix else g
+        build = _prefix_pairs if prefix else _naive_pairs
+        with persisted(held):
+            return build(held, threshold).localCheckpoint(eager=True).count()
+
     for threshold in (0.35, 0.7):
         for prefix in (False, True):
             # warm-up run, then timed repeats (cold plan each time: the
-            # input is cached, the pair plan is rebuilt per run).
-            # pin=True = the registered-query configuration (eager output
-            # + released shingle caches); pin=False flips the winner at
-            # low thresholds because the prefix path's extra
-            # materializations are what it pays for its pruning
+            # input is cached, the pair plan is rebuilt per run)
             times = []
             n = None
             for r in range(REPEATS + 1):
                 t0 = time.time()
-                n = ngram_jaccard_pairs(
-                    docs,
-                    n=3,
-                    threshold=threshold,
-                    char_level=False,
-                    prefix_filter=prefix,
-                    pin=True,
-                ).count()
+                n = run(threshold, prefix)
                 if r > 0:
                     times.append(time.time() - t0)
             label = "prefix" if prefix else "naive "

@@ -363,11 +363,14 @@ def lang_id(col: Column | str) -> Column:
 
 
 def fingerprint(col: Column | str) -> Column:
-    """Canonical-form document fingerprint: lowercase, collapse whitespace,
-    strip punctuation, md5. Stable across engines (md5 exists in DuckDB) —
-    the exact-dedup key for 100 TB corpora."""
+    """Canonical-form document fingerprint: lowercase, every run of
+    characters that are neither Unicode letters nor digits becomes one
+    space, trim, md5. Non-ASCII scripts keep their letters, so distinct
+    Cyrillic documents get distinct fingerprints. Stable across engines
+    (md5 and the Unicode letter/digit classes exist in DuckDB) — the
+    exact-dedup key for 100 TB corpora."""
     c = F.col(col) if isinstance(col, str) else col
-    canon = F.trim(F.regexp_replace(F.lower(c), r"[^a-z0-9]+", " "))
+    canon = F.trim(F.regexp_replace(F.lower(c), _NONWORD, " "))
     return F.md5(canon)
 
 

@@ -24,16 +24,6 @@ def hhmm_to_seconds(col: Column | str) -> Column:
     return F.when(valid, h.cast("int") * 3600 + m.cast("int") * 60)
 
 
-def seconds_to_hhmm(col: Column | str) -> Column:
-    """seconds since midnight → 'HH:mm' display string."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.concat_ws(
-        ":",
-        F.lpad((c / 3600).cast("int").cast("string"), 2, "0"),
-        F.lpad(((c % 3600) / 60).cast("int").cast("string"), 2, "0"),
-    )
-
-
 def parse_ddmmyyyy(col: Column | str) -> Column:
     """'dd.MM.yyyy' → date, NULL on failure (X8, iis_etl/logic.py:52-56).
 

@@ -75,19 +75,6 @@ def cosine_arrow(a: Column | str, b: Column | str) -> Column:
     return _cosine_arrow_udf(_as_col(a), _as_col(b))
 
 
-def l2_distance(a: Column | str, b: Column | str) -> Column:
-    a, b = _as_col(a), _as_col(b)
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                a, b, lambda x, y: (x.cast("double") - y.cast("double")) ** 2
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 def l2_normalize(a: Column | str) -> Column:
     """Unit-normalize a vector (zero vectors pass through unchanged) —
     pre-normalizing a corpus turns every cosine into a plain dot and

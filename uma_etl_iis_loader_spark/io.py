@@ -14,7 +14,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schemas import FIXTURE_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -82,10 +81,6 @@ def read_fixture(
         else:
             df = df.repartition(int(nparts))
     return df
-
-
-def load_fixtures(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: read_fixture(spark, sf_dir, name) for name in FIXTURE_TABLES}
 
 
 def write_snapshot(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:

@@ -1,20 +1,22 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Four tiers, trading recall for cost (all shuffle-safe, no driver collect):
+One implementation per capability, trading recall for cost (all
+shuffle-safe, no driver collect):
 
 - ``exact_dedup``          — canonical-form fingerprint groupBy. O(n).
-- ``ngram_jaccard_pairs``  — exact word-n-gram Jaccard via inverted-index
-                             self-join. Exact but quadratic in the worst
-                             case; n-grams of 3+ words keep candidate sets
-                             sparse. The verify step of choice.
-- ``minhash_lsh_pairs``    — MinHash signatures + banded LSH bucketing:
-                             the 100 TB path. Cost ∝ n × (candidates per
-                             bucket); exact Jaccard verify only on bucket
-                             collisions.
+- ``ngram_jaccard_pairs``  — exact word-n-gram Jaccard. The threshold
+                             picks between PPJoin prefix filtering and a
+                             naive inverted-index join (same output). The
+                             verify step of choice.
+- ``minhash_lsh_pairs``    — MinHash signatures + banded LSH bucketing,
+                             exact Jaccard verified per bucket in an Arrow
+                             kernel: the 100 TB path. Cost ∝ n × (members
+                             per colliding bucket).
 - ``simhash_pairs``        — 64-bit SimHash + banded Hamming candidates.
-- ``embedding_cosine_pairs`` — near-dup by embedding cosine (blocked
-                             self-join; for web scale use the IVF/LSH
-                             bucketing in operators/similarity.py first).
+- ``embedding_cosine_pairs`` — exact near-dup by embedding cosine (tiled
+                             block-matmul self-join; for web scale use the
+                             IVF/LSH bucketing in operators/similarity.py
+                             first).
 - ``semantic_dedup``       — cluster-scoped embedding near-dup (SemDeDup
                              shape): k-means the space, compare only
                              within clusters — linear-ish at web scale,
@@ -26,6 +28,9 @@ min id per component).
 
 All pair outputs are (id_a < id_b) canonical, ids only — similarity scores
 stay internal so cross-engine float noise can't flip a comparison result.
+The pair generators return materialized outputs (``localCheckpoint``) and
+hold their cached intermediates only inside ``lifetime.persisted`` blocks,
+so nothing stays cached after a call returns or raises.
 """
 
 from __future__ import annotations
@@ -37,8 +42,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import char_ngrams, fingerprint, word_ngrams
-from ..functions.vectors import cosine_arrow
+from ..functions.text import fingerprint
+from .lifetime import persisted
 
 
 def _simhash_pandas_udf(gram_n: int):
@@ -130,91 +135,50 @@ def _gram_table(
     )
 
 
-# Threshold cutoff for automatic path selection: at t ≥ 0.6 the PPJoin
-# prefix is ≤ ~40% of each doc's grams and candidate pruning beats the
-# naive join's hot-gram quadratic blowup; below it the prefix covers most
-# of the doc (at t=0.35 it is ~65%), so the extra df-ordering shuffle +
-# verify join cost more than they prune. Measured on the fixture corpus
-# (see tests/test_dedup.py::test_adaptive_path_selection and bench notes).
+# Threshold cutoff between the two exact paths of ngram_jaccard_pairs: at
+# t ≥ 0.6 the PPJoin prefix is ≤ ~40% of each doc's grams and candidate
+# pruning beats the naive join's hot-gram quadratic blowup; below it the
+# prefix covers most of the doc (at t=0.35 it is ~65%), so the extra
+# df-ordering shuffle + verify join cost more than they prune. Measured on
+# the fixture corpus (tools/bench_ngram_paths.py).
 PREFIX_FILTER_MIN_THRESHOLD = 0.6
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-    char_level: bool = False,
-    prefix_filter: bool | None = None,
-    pin: bool = True,
-) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs ≥ ``threshold``.
-
-    Default path is PPJoin-style prefix filtering (Chaudhuri et al. 2006 /
-    Vernica et al. SIGMOD'10 MapReduce set-similarity): order each doc's
-    grams by ascending document frequency (rarest first, (df, gram) as the
-    global total order), explode only the prefix of length
-    |x| − ⌈t·|x|⌉ + 1 — any pair with Jaccard ≥ t must share a prefix
-    token — join prefixes, apply the size filter min ≥ t·max, then verify
-    candidates with exact intersect/union on the full gram arrays. Output
-    is identical to the naive inverted-index join, but the join
-    intermediate shrinks from Σ(posting list)² pair rows to only
-    rare-token collisions.
-
-    ``prefix_filter=None`` (default) selects the path from the threshold:
-    prefix filtering at t ≥ PREFIX_FILTER_MIN_THRESHOLD (where the prefix
-    is short and posting-list pruning wins — the 100 TB path for
-    dedup-grade thresholds), the naive inverted-index join below it
-    (where the prefix covers most grams and pruning can't pay for its
-    df-ordering shuffle). Both paths produce identical output
-    (equivalence pytest-pinned); pass an explicit bool to force one.
-
-    ``pin=True`` (default) eagerly materializes the small pair output and
-    releases the cached/shingle intermediates immediately (no persist
-    leak across a long session); pass ``pin=False`` to keep the plan lazy
-    for composition or plan inspection — the caller then owns the cost of
-    re-evaluating the gram UDF per downstream reference.
-    """
-    if prefix_filter is None:
-        prefix_filter = threshold >= PREFIX_FILTER_MIN_THRESHOLD
-    g = _gram_table(docs, id_col, text_col, n, char_level)
-    if not prefix_filter:
-        # Pin the gram table eagerly: the self-join references it twice and
-        # both size() and explode() reference the UDF column, so without a
-        # materialization barrier Catalyst's project-collapse evaluates the
-        # gram UDF FOUR times (visible as 4 ArrowEvalPython nodes). One
-        # materialized shingle table is also what a real pipeline persists
-        # at corpus scale. sz rides along so no size joins are needed after
-        # the pair count (functionally dependent on id — free groupBy key).
-        g = g.select("id", F.size("grams").alias("sz"), "grams")
-        if pin:
-            g = g.localCheckpoint(eager=True)
-        inv = g.select("id", "sz", F.explode("grams").alias("gram"))
-        a, b = inv.alias("a"), inv.alias("b")
-        return (
-            a.join(b, "gram")
-            .filter(F.col("a.id") < F.col("b.id"))
-            .groupBy(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                F.col("a.sz").alias("sz_a"),
-                F.col("b.sz").alias("sz_b"),
-            )
-            .agg(F.count(F.lit(1)).alias("shared"))
-            .filter(
-                F.col("shared")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("shared"))
-                >= threshold
-            )
-            .select("id_a", "id_b")
+def _naive_pairs(g: DataFrame, threshold: float) -> DataFrame:
+    """Lazy naive inverted-index join over an ``(id, grams)`` table:
+    count the grams each pair shares and keep Jaccard ≥ ``threshold``.
+    ``sz`` rides along so no size joins are needed after the pair count
+    (functionally dependent on id — a free groupBy key)."""
+    inv = g.select(
+        "id", F.size("grams").alias("sz"), F.explode("grams").alias("gram")
+    )
+    a, b = inv.alias("a"), inv.alias("b")
+    return (
+        a.join(b, "gram")
+        .filter(F.col("a.id") < F.col("b.id"))
+        .groupBy(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            F.col("a.sz").alias("sz_a"),
+            F.col("b.sz").alias("sz_b"),
         )
+        .agg(F.count(F.lit(1)).alias("shared"))
+        .filter(
+            F.col("shared")
+            / (F.col("sz_a") + F.col("sz_b") - F.col("shared"))
+            >= threshold
+        )
+        .select("id_a", "id_b")
+    )
 
+
+def _df_ordered_grams(g: DataFrame) -> DataFrame:
+    """``(id, grams, sz)`` with each doc's grams re-assembled in ascending
+    (df, gram) order — rarest first, the global total order the PPJoin
+    prefix is taken in."""
     inv = g.select("id", F.explode("grams").alias("gram"))
     freq = inv.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
-    # grams per doc re-assembled in (df, gram) ascending order; persisted —
-    # reused by the prefix explode and twice by the verify join.
-    ordered = (
+    return (
         inv.join(freq, "gram")
         .groupBy("id")
         .agg(F.array_sort(F.collect_list(F.struct("df", "gram"))).alias("og"))
@@ -223,8 +187,12 @@ def ngram_jaccard_pairs(
             F.col("og").getField("gram").alias("grams"),
             F.size("og").alias("sz"),
         )
-        .persist()
     )
+
+
+def _prefix_pairs(ordered: DataFrame, threshold: float) -> DataFrame:
+    """Lazy PPJoin over :func:`_df_ordered_grams` output: join prefixes,
+    apply the size filter, verify candidates on the full gram arrays."""
     # ⌈t·sz⌉ with an epsilon so float noise can't round 7.0 up to 8 and
     # shorten the prefix (a too-short prefix loses exactness; one token
     # extra only costs candidates).
@@ -248,7 +216,7 @@ def ngram_jaccard_pairs(
     )
     ga = ordered.select(F.col("id").alias("id_a"), F.col("grams").alias("grams_a"))
     gb = ordered.select(F.col("id").alias("id_b"), F.col("grams").alias("grams_b"))
-    out = (
+    return (
         candidates.join(ga, "id_a")
         .join(gb, "id_b")
         .filter(
@@ -258,13 +226,49 @@ def ngram_jaccard_pairs(
         )
         .select("id_a", "id_b")
     )
-    # the pair output is tiny relative to the cached gram table: pin it
-    # eagerly (lineage truncated) so the persisted intermediate can be
-    # released NOW instead of leaking for the session's lifetime
-    if pin:
-        out = out.localCheckpoint(eager=True)
-        ordered.unpersist()
-    return out
+
+
+def ngram_jaccard_pairs(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    threshold: float = 0.5,
+    char_level: bool = False,
+) -> DataFrame:
+    """Exact n-gram Jaccard near-dup pairs ≥ ``threshold``.
+
+    Two exact paths with identical output; the threshold picks one:
+
+    - t ≥ ``PREFIX_FILTER_MIN_THRESHOLD``: PPJoin-style prefix filtering
+      (Chaudhuri et al. 2006 / Vernica et al. SIGMOD'10 MapReduce
+      set-similarity). Each doc's grams are ordered by ascending document
+      frequency and only the prefix of length |x| − ⌈t·|x|⌉ + 1 is
+      exploded — any pair with Jaccard ≥ t must share a prefix token.
+      Prefixes join, the size filter min ≥ t·max applies, and candidates
+      are verified with exact intersect/union on the full gram arrays.
+      The join intermediate shrinks from Σ(posting list)² pair rows to
+      rare-token collisions: the hot-gram path for dedup-grade
+      thresholds.
+    - below it: the naive inverted-index join, because the prefix then
+      covers most grams and pruning can't pay for its df-ordering
+      shuffle.
+
+    The output is materialized (``localCheckpoint``) before returning,
+    and the gram intermediate is released, on success or failure.
+    """
+    g = _gram_table(docs, id_col, text_col, n, char_level)
+    if threshold >= PREFIX_FILTER_MIN_THRESHOLD:
+        # reused by the prefix explode and twice by the verify join
+        held, build = _df_ordered_grams(g), _prefix_pairs
+    else:
+        # the self-join reads the gram table twice and both size() and
+        # explode() read the UDF column: without a materialization
+        # barrier Catalyst's project-collapse evaluates the gram UDF four
+        # times (four ArrowEvalPython nodes)
+        held, build = g, _naive_pairs
+    with persisted(held):
+        return build(held, threshold).localCheckpoint(eager=True)
 
 
 def _minhash_sig_udf(num_hashes: int):
@@ -422,45 +426,6 @@ def _raise_lsh_budget(
     )
 
 
-def _lsh_candidate_budget_check(
-    banded: DataFrame,
-    max_candidate_pairs: int,
-    max_bucket: int | None,
-    bands: int,
-    rows: int,
-    threshold: float,
-) -> None:
-    """Fail-fast candidate-mass guard: one count aggregation over the
-    band entries (Σ m·(m−1)/2 per colliding bucket — or m−1 for buckets
-    above the chaining ceiling) BEFORE any verify work runs. A
-    boilerplate-dense corpus at a recall-tuned banding can put millions
-    of pairs through the verify step; this turns a multi-minute (at
-    100 TB: multi-hour) surprise into an immediate error that carries
-    the measured mass and the banding recipe. (The grouped verify path
-    folds this check into its collision-stats collect instead of
-    calling here — one aggregation serves guard + shuffle sizing.)"""
-    m = F.col("m")
-    stat = (
-        banded.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("m"))
-        .filter(m >= 2)
-        .agg(
-            F.coalesce(
-                F.sum(_chained_mass_expr(m, max_bucket)), F.lit(0.0)
-            ).alias("mass"),
-            F.coalesce(F.max("m"), F.lit(0)).alias("max_m"),
-            F.count(F.lit(1)).alias("n_buckets"),
-        )
-        .collect()[0]
-    )
-    mass = int(stat["mass"])
-    if mass > max_candidate_pairs:
-        _raise_lsh_budget(
-            mass, int(stat["n_buckets"]), int(stat["max_m"]),
-            max_candidate_pairs, max_bucket, bands, rows, threshold,
-        )
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -470,50 +435,32 @@ def minhash_lsh_pairs(
     n: int = 3,
     threshold: float = 0.5,
     char_level: bool = True,
-    pin: bool = True,
-    verify: str = "grouped",
     max_bucket: int | None = None,
     sig_margin: float | None = None,
     max_candidate_pairs: int | None = None,
 ) -> DataFrame:
-    """MinHash + banded LSH near-dup pairs, exact-Jaccard verified
-    (``pin`` as in ngram_jaccard_pairs: eager output + released caches).
-
-    Cache lifetime: ``pin=True`` (default) eagerly materializes the
-    small pair output (``localCheckpoint``) and unpersists BOTH internal
-    caches — the signature/gram frame and, in grouped mode, the
-    collision-stats frame (``bstats``, the per-(band, bucket) size agg
-    that serves the budget guard and pins the verify shuffle degree).
-    ``pin=False`` returns a LAZY plan that still references both frames,
-    so both stay persisted for the plan's lifetime; no handle to them is
-    returned, so the caller releases them via
-    ``spark.catalog.clearCache()`` (or session teardown) once the
-    returned plan is consumed. The budget-guard failure path unpersists
-    both before raising regardless of ``pin``.
+    """MinHash + banded LSH near-dup pairs, exact-Jaccard verified.
 
     bands×rows = num_hashes; a pair collides if any band's row-slice
     matches exactly. Candidates are verified with exact gram Jaccard, so
     the output has no false positives — LSH only bounds recall.
 
-    ``verify`` picks the verification strategy (identical pair set,
-    law-tested in tests/test_dedup.py):
+    Verify runs per bucket in an Arrow kernel (``mapInPandas`` over
+    (band, bucket)-sorted partitions): each colliding doc's gram array
+    is shuffled ONCE PER BUCKET MEMBERSHIP (Σ m rows), never once per
+    candidate pair (Σ m²/2 rows), and no candidate self-join exists;
+    ``distinct`` runs on the small PASSING pair set. Measured at the 10x
+    scale step's recall-tuned operating point (sf10, 500k docs, 5.3M
+    candidates): a candidate-join verify took 131 s, this one 30 s, same
+    pairs. Zero-gram docs (text shorter than n) are filtered before
+    bucketing: they share the sentinel signature, so at web scale they
+    would form ONE corpus-wide bucket per band, and their 0/0 Jaccard
+    could never pass anyway.
 
-    - ``"grouped"`` (default): per-bucket Arrow kernel
-      (``applyInPandas`` over (band, bucket)) — each colliding doc's
-      gram array is shuffled ONCE PER BUCKET MEMBERSHIP (Σ m rows),
-      never once per candidate pair (Σ m²/2 rows), and the m²/2-row
-      candidate self-join disappears entirely; ``distinct`` runs on the
-      small PASSING pair set. Measured at the 10x scale step's
-      recall-tuned operating point (sf10, 500k docs, 5.3M candidates):
-      join verify 131 s → grouped 30 s, same pairs. Zero-gram docs
-      (text shorter than n) are filtered before bucketing: they share
-      the sentinel signature, so at web scale they form ONE corpus-wide
-      bucket per band (a skew bomb the join path paid as m²/2 NULL-
-      verdict candidates); the join path's inline 0/0→NULL Jaccard
-      drops those pairs anyway, so filtering preserves the pair set.
-    - ``"join"``: the classic candidates-then-gram-join pipeline —
-      kept for A/B and for engines where Python workers are
-      unavailable; ignores ``max_bucket``/``sig_margin``.
+    The output is materialized (``localCheckpoint``) before returning;
+    both internal caches — the signature/gram frame and the
+    per-(band, bucket) collision stats — are released on every exit,
+    including a raise.
 
     Scale knobs (both preserve "no false positives"; both are recall-
     side and off by default so the default output is exactly the
@@ -539,53 +486,40 @@ def minhash_lsh_pairs(
       (grams ≫ num_hashes); at gram counts comparable to num_hashes
       the estimate costs what it saves, leave it off.
 
-    ``max_candidate_pairs``: fail-fast budget guard — one count
-    aggregation over the band entries raises BEFORE any verify work if
-    the candidate mass (Σ m·(m−1)/2, or m−1 above the chaining ceiling)
-    exceeds the budget, naming the measured mass and the banding
-    recipe. Use it anywhere a recall-tuned banding meets an
-    uncurated corpus.
+    ``max_candidate_pairs``: fail-fast budget guard — the collision-stats
+    aggregation that sizes the verify shuffle also measures the
+    candidate mass (Σ m·(m−1)/2, or m−1 above the chaining ceiling) and
+    raises BEFORE any verify work if it exceeds the budget, naming the
+    measured mass and the banding recipe. Use it anywhere a
+    recall-tuned banding meets an uncurated corpus.
 
     Scale: the bucket shuffle keys on (band, band_hash) — web-scale safe
     because bucket sizes concentrate around duplicates; the three knobs
     above are the answer for corpora where they don't (boilerplate-
-    dense web crawls). The grouped verify's shuffle degree is PINNED
-    from the collision stats (candidate mass / colliding member rows)
-    rather than inherited from ``spark.sql.shuffle.partitions`` or AQE
+    dense web crawls). The verify's shuffle degree is PINNED from the
+    collision stats (candidate mass / colliding member rows) rather
+    than inherited from ``spark.sql.shuffle.partitions`` or AQE
     coalescing, so the verify plan is identical run-to-run and scales
     its task count with the measured work, not a static config.
     """
-    if verify not in ("grouped", "join"):
-        raise ValueError(f"verify must be 'grouped' or 'join', got {verify!r}")
     rows = num_hashes // bands
     sigs = minhash_signature(docs, id_col, text_col, num_hashes, n, char_level)
-    sigs = sigs.persist()
-
-    if verify == "grouped":
-        # zero-gram docs share the sentinel signature: one corpus-wide
-        # bucket per band. Their pairs can never pass (join path: 0/0
-        # Jaccard = NULL, dropped) — exclude them BEFORE bucketing so
-        # the sentinel bucket never materializes.
-        gram_cols = ["id", "grams"] + (["sig"] if sig_margin is not None else [])
-        nonempty = sigs.select(*gram_cols).filter(F.size("grams") > 0)
-        banded = _band_entries(
-            sigs.filter(F.size("grams") > 0), bands, rows
-        )
-        # singleton buckets (the overwhelming majority) drop here while
-        # rows are still (id, band, bucket) — a count agg whose result
-        # is collision-sized (AQE broadcasts it back); gram arrays join
-        # in ONLY for the colliding survivor set, so no shuffle ever
-        # moves documents for non-colliding entries. The stats frame is
-        # persisted and driver-summarized ONCE: the same aggregation
-        # serves the fail-fast budget guard AND pins the verify
-        # shuffle's partition count (below), so the guard costs nothing
-        # extra in grouped mode.
-        bstats = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("bsize"))
-            .filter(F.col("bsize") >= 2)
-            .persist()
-        )
+    gram_cols = ["id", "grams"] + (["sig"] if sig_margin is not None else [])
+    nonempty = sigs.select(*gram_cols).filter(F.size("grams") > 0)
+    banded = _band_entries(sigs.filter(F.size("grams") > 0), bands, rows)
+    # singleton buckets (the overwhelming majority) drop here while rows
+    # are still (id, band, bucket) — a count agg whose result is
+    # collision-sized (AQE broadcasts it back); gram arrays join in ONLY
+    # for the colliding survivor set, so no shuffle ever moves documents
+    # for non-colliding entries. The stats frame is driver-summarized
+    # ONCE: the same aggregation serves the budget guard AND pins the
+    # verify shuffle's partition count (below).
+    bstats = (
+        banded.groupBy("band", "bucket")
+        .agg(F.count(F.lit(1)).alias("bsize"))
+        .filter(F.col("bsize") >= 2)
+    )
+    with persisted(sigs, bstats):
         bs = F.col("bsize")
         summ = bstats.agg(
             F.coalesce(
@@ -597,8 +531,6 @@ def minhash_lsh_pairs(
         ).collect()[0]
         mass, members_n = int(summ["mass"]), int(summ["members"])
         if max_candidate_pairs is not None and mass > max_candidate_pairs:
-            sigs.unpersist()
-            bstats.unpersist()
             _raise_lsh_budget(
                 mass, int(summ["n_buckets"]), int(summ["max_m"]),
                 max_candidate_pairs, max_bucket, bands, rows, threshold,
@@ -638,65 +570,22 @@ def minhash_lsh_pairs(
         # applyInPandas: one pandas frame per ~10k-row Arrow batch, not
         # one per bucket — per-group frame construction dominated on
         # small-bucket corpora (measured sf1: 45 s applyInPandas ->
-        # 5.3 s streaming, join-verify parity; sf10 recall point:
-        # 34 s vs 131 s join verify).
-        verified = (
+        # 5.3 s streaming, same pairs; sf10 recall point: 34 s vs 131 s
+        # for a candidate-join verify).
+        return (
             members.repartition(nparts, "band", "bucket")
             .sortWithinPartitions("band", "bucket")
             .mapInPandas(kern, f"id_a {id_dt}, id_b {id_dt}")
             .distinct()
+            .localCheckpoint(eager=True)
         )
-    else:
-        banded = _band_entries(sigs, bands, rows)
-        if max_candidate_pairs is not None:
-            _lsh_candidate_budget_check(
-                banded, max_candidate_pairs, None, bands, rows, threshold
-            )
-        la, lb = banded.alias("a"), banded.alias("b")
-        candidates = (
-            la.join(lb, ["band", "bucket"])
-            .filter(F.col("a.id") < F.col("b.id"))
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .distinct()
-        )
-
-        ga = sigs.select(
-            F.col("id").alias("id_a"), F.col("grams").alias("grams_a")
-        )
-        gb = sigs.select(
-            F.col("id").alias("id_b"), F.col("grams").alias("grams_b")
-        )
-        verified = (
-            candidates.join(ga, "id_a")
-            .join(gb, "id_b")
-            .withColumn(
-                "jac",
-                # try_divide: two zero-gram docs (sentinel-signature
-                # collision) yield 0/0 → NULL → dropped, instead of an
-                # ANSI-mode DIVIDE_BY_ZERO crash
-                F.try_divide(
-                    F.size(F.array_intersect("grams_a", "grams_b")),
-                    F.size(F.array_union("grams_a", "grams_b")),
-                ),
-            )
-            .filter(F.col("jac") >= threshold)
-            .select("id_a", "id_b")
-        )
-    # pin the (small) verified pairs eagerly, release the signature cache
-    if pin:
-        verified = verified.localCheckpoint(eager=True)
-        sigs.unpersist()
-        if verify == "grouped":
-            bstats.unpersist()
-    return verified
 
 
 def _bucket_verify_stream_kernel(
     threshold: float, max_bucket: int | None, sig_margin: float | None
 ):
     """Streaming per-bucket exact-Jaccard verify for
-    :func:`minhash_lsh_pairs`'s grouped strategy: a ``mapInPandas``
-    kernel over partitions sorted by (band, bucket). Buckets are cut at
+    :func:`minhash_lsh_pairs`: a ``mapInPandas`` kernel over partitions sorted by (band, bucket). Buckets are cut at
     sort change-points inside each Arrow batch (a bucket spanning batch
     boundaries is carried forward — memory is bounded by the largest
     single bucket, the same bound ``applyInPandas`` had); emits the
@@ -863,14 +752,10 @@ def lsh_bucket_balance(stats: DataFrame, max_bucket: int | None = None) -> dict:
     instead of m·(m−1)/2 — i.e. exactly the accounting the in-operator
     ``max_candidate_pairs`` guard applies.
     """
-    n = F.col("n_docs")
-    per_bucket = n * (n - 1) / 2
-    if max_bucket is not None:
-        per_bucket = F.when(
-            n > max_bucket, (n - 1).cast("double")
-        ).otherwise(per_bucket)
     row = stats.agg(
-        F.coalesce(F.sum(per_bucket), F.lit(0.0)).alias("cp"),
+        F.coalesce(
+            F.sum(_chained_mass_expr(F.col("n_docs"), max_bucket)), F.lit(0.0)
+        ).alias("cp"),
         F.count(F.lit(1)).alias("nb"),
         F.coalesce(F.max("n_docs"), F.lit(0)).alias("mx"),
         F.coalesce(F.avg("n_docs"), F.lit(0.0)).alias("mean"),
@@ -890,16 +775,17 @@ def simhash_pairs(
     max_hamming: int = 3,
     bands: int = 4,
     gram_n: int = 2,
-    pin: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs: 64-bit signatures, banded into ``bands``
     16-bit chunks (pigeonhole: hamming ≤ bands-1 guarantees a band match),
-    verified with exact popcount of XOR."""
+    verified with exact popcount of XOR. The output is materialized
+    (``localCheckpoint``); the signature cache is released on every
+    exit."""
     width = 64 // bands
     sigs = docs.select(
         F.col(id_col).alias("id"),
         _simhash_pandas_udf(gram_n)(F.col(text_col)).alias("sig"),
-    ).persist()
+    )
     band_structs = F.array(
         *[
             F.struct(
@@ -930,11 +816,8 @@ def simhash_pairs(
         )
         .select("id_a", "id_b")
     )
-    # pin the (small) pair output eagerly, release the signature cache
-    if pin:
-        out = out.localCheckpoint(eager=True)
-        sigs.unpersist()
-    return out
+    with persisted(sigs):
+        return out.localCheckpoint(eager=True)
 
 
 def embedding_cosine_pairs(
@@ -942,77 +825,31 @@ def embedding_cosine_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    method: str = "tiled",
     blocks: int = 8,
-    srp_bits: int = 64,
-    srp_bands: int = 8,
-    d: int | None = None,
 ) -> DataFrame:
-    """Near-dup pairs by embedding cosine ≥ threshold.
+    """Exact near-dup pairs by embedding cosine ≥ threshold, as a blocked
+    self-join.
 
-    Three strategies (``method``):
-
-    - ``"tiled"`` (default, EXACT): blocked self-join. Each vector is
-      hashed into one of ``blocks`` blocks and replicated to the
-      ``blocks`` tile-pairs containing its block; each (i ≤ j) tile runs
-      ONE normalized numpy matmul over its two blocks and emits only the
-      qualifying pairs. Exact mid-threshold dense all-pairs similarity is
-      Θ(n²·d) *compute* by concentration-of-measure (near-orthogonal
-      vectors give LSH no recall/pruning headroom at e.g. t=0.45), but
-      tiling changes what's *shuffled*: n·blocks replicated vectors
-      instead of the n²/2 joined pair rows a crossJoin materializes, and
-      the per-pair work drops from an Arrow-kernel row call to a BLAS
-      inner loop. Size ``blocks`` so 2·(n/blocks) vectors fit an executor
-      (at 100 TB: blocks ≈ n·d·8B / 100 MB tiles).
-    - ``"srp"`` (approximate, high-threshold path): signed-random-
-      projection banded candidates (operators/similarity._srp_bands) +
-      exact cosine verify — no false positives, recall
-      1-(1-p^width)^bands with p = 1-θ/π. The right ladder rung when the
-      threshold is high (θ small) and n² compute is unaffordable.
-    - ``"crossjoin"`` (exact, tiny inputs / equivalence oracle).
+    Each vector is hashed into one of ``blocks`` blocks and replicated to
+    the ``blocks`` tile-pairs containing its block; each (i ≤ j) tile runs
+    ONE normalized numpy matmul over its two blocks and emits only the
+    qualifying pairs. Exact mid-threshold dense all-pairs similarity is
+    Θ(n²·d) *compute* by concentration-of-measure (near-orthogonal vectors
+    give LSH no recall/pruning headroom at e.g. t=0.45), but tiling
+    changes what's *shuffled*: n·blocks replicated vectors instead of the
+    n²/2 joined pair rows a crossJoin materializes, and the per-pair work
+    drops from an Arrow-kernel row call to a BLAS inner loop. Size
+    ``blocks`` so 2·(n/blocks) vectors fit an executor (at 100 TB:
+    blocks ≈ n·d·8B / 100 MB tiles). Ids must be integral.
     """
     v = embeddings.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
     )
-    if method == "crossjoin":
-        a, b = v.alias("a"), v.alias("b")
-        return (
-            a.crossJoin(b)
-            .filter(F.col("a.id") < F.col("b.id"))
-            .filter(cosine_arrow(F.col("a.vec"), F.col("b.vec")) >= threshold)
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        )
-    if method == "srp":
-        from .similarity import _srp_bands
-
-        if d is None:
-            d = len(v.select("vec").first()[0])
-        planes = np.random.default_rng(42).standard_normal((srp_bits, d))
-        sig = _srp_bands(v, planes, "id", "id", "vec", srp_bands)
-        sa, sb = sig.alias("a"), sig.alias("b")
-        candidates = (
-            sa.join(sb, ["band", "chunk"])
-            .filter(F.col("a.id") < F.col("b.id"))
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .distinct()
-        )
-        va = v.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a"))
-        vb = v.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"))
-        return (
-            candidates.join(va, "id_a")
-            .join(vb, "id_b")
-            .filter(cosine_arrow(F.col("vec_a"), F.col("vec_b")) >= threshold)
-            .select("id_a", "id_b")
-        )
-    if method != "tiled":
-        raise ValueError(f"unknown method {method!r}: tiled|srp|crossjoin")
-
     id_type = dict(v.dtypes)["id"]
     if id_type not in ("bigint", "int", "smallint", "tinyint"):
         raise TypeError(
             f"tiled cosine pair join requires an integral id column "
-            f"(got {id_type}); hash non-integral ids to int64 first, or "
-            f"use method='crossjoin' for type-agnostic exact pairs"
+            f"(got {id_type}); hash non-integral ids to int64 first"
         )
 
     # tile-pair ids (i ≤ j) each row participates in: (i, blk) for i < blk,
@@ -1347,95 +1184,6 @@ def dedup_sentence_spans(
     ).withColumnRenamed("__id", id_col)
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14) — the
-    contraction variant whose round count is O(log n) EVEN for giant
-    high-diameter components, where plain label propagation needs
-    O(diameter) rounds. Use when components can be huge (web-graph-scale
-    duplicate families); for typical near-dup graphs
-    ``connected_components`` converges in fewer, cheaper rounds.
-
-    large-star: every node's strictly-larger neighbors re-attach to the
-    minimum of its closed neighborhood; small-star: the smaller-or-equal
-    neighbors (and the node) attach to that minimum. Alternating the two
-    strictly shrinks the edge potential until the graph is a forest of
-    stars rooted at each component's min — read the labels straight off
-    the final edges. Same output contract as ``connected_components``
-    (equivalence property-tested on randomized graphs).
-    """
-    edges = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    ).filter(F.col("src") != F.col("dst"))
-    # canonical undirected form, pinned (see connected_components)
-    edges = (
-        edges.select(
-            F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def star(e: DataFrame, large: bool) -> DataFrame:
-        sym = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        m = sym.groupBy("src").agg(
-            F.least(F.min("dst"), F.first("src")).alias("m")
-        )
-        j = sym.join(m, "src")
-        attach = j.filter(
-            F.col("dst") > F.col("src") if large else F.col("dst") <= F.col("src")
-        ).select(F.col("dst").alias("a"), F.col("m").alias("b"))
-        self_edge = j.select(F.col("src").alias("a"), F.col("m").alias("b"))
-        out = attach.unionByName(self_edge) if not large else attach
-        return (
-            out.filter(F.col("a") != F.col("b"))
-            .select(
-                F.least("a", "b").alias("src"), F.greatest("a", "b").alias("dst")
-            )
-            .distinct()
-        )
-
-    prev_sig = None
-    for _ in range(max_iter):
-        edges = star(star(edges, large=True), large=False).localCheckpoint(
-            eager=True
-        )
-        sig = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            # xor-fold: order-independent, cannot overflow under ANSI mode
-            F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
-        ).first()
-        if (sig["n"], sig["h"]) == prev_sig:
-            break
-        prev_sig = (sig["n"], sig["h"])
-    # stable star forest: every node's component is min(node, min neighbor)
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    labels = sym.groupBy("src").agg(
-        F.least(F.min("dst"), F.first("src")).alias("comp")
-    )
-    return (
-        nodes.join(
-            labels.select(F.col("src").alias("node"), "comp"), "node", "left"
-        )
-        .select("node", F.coalesce("comp", "node").alias("comp"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # incremental dedup: persisted MinHash-LSH index for a growing corpus
 # ---------------------------------------------------------------------------
@@ -1488,9 +1236,8 @@ def build_minhash_index(
     consistent with these."""
     rows = num_hashes // bands
     sigs = minhash_signature(docs, id_col, text_col, num_hashes, n, char_level)
-    sigs = sigs.persist()
-    _write_index_state(sigs, path, bands, rows, "overwrite")
-    sigs.unpersist()
+    with persisted(sigs):
+        _write_index_state(sigs, path, bands, rows, "overwrite")
 
 
 def append_minhash_index(
@@ -1512,9 +1259,8 @@ def append_minhash_index(
     indexed copy and silently drops it."""
     rows = num_hashes // bands
     sigs = minhash_signature(docs, id_col, text_col, num_hashes, n, char_level)
-    sigs = sigs.persist()
-    _write_index_state(sigs, path, bands, rows, "append")
-    sigs.unpersist()
+    with persisted(sigs):
+        _write_index_state(sigs, path, bands, rows, "append")
 
 
 def _verify_jaccard(ga, gb, fp_a, fp_b):
@@ -1590,172 +1336,169 @@ def dedup_increment(
     rows = num_hashes // bands
     sigs = minhash_signature(
         new_docs, id_col, text_col, num_hashes, n, char_level
-    ).persist()
-    banded_new = _band_entries(sigs, bands, rows).persist()
+    )
+    banded_new = _band_entries(sigs, bands, rows)
 
     from .index_pointer import resolve_table
 
     idx_bands = spark.read.parquet(resolve_table(index_path, "bands"))
     idx_grams = spark.read.parquet(resolve_table(index_path, "grams"))
 
-    telemetry = None
-    if max_candidate_pairs is not None:
-        new_cnt = banded_new.groupBy("band", "bucket").agg(
-            F.count(F.lit(1)).alias("m_new")
-        )
-        # count_distinct: duplicate index rows (benign replayed-append
-        # residue, see the loud-guard comment below) must not inflate mass
-        old_cnt = idx_bands.groupBy("band", "bucket").agg(
-            F.count_distinct("id").alias("m_old")
-        )
-        mn, mo = F.col("m_new"), F.coalesce(F.col("m_old"), F.lit(0))
-        stat = (
-            new_cnt.join(old_cnt, ["band", "bucket"], "left")
-            # mass-contributing buckets only (m_new·m_old + m_new·(m_new−1)/2
-            # > 0 ⇔ index collision or ≥2 shard members) — singleton shard
-            # buckets with zero candidate mass are excluded so n_buckets
-            # matches the batch guard's colliding-bucket semantics
-            .filter((mo >= 1) | (mn >= 2))
-            .agg(
-                F.coalesce(
-                    F.sum(mn * mo + mn * (mn - 1) / 2), F.lit(0.0)
-                ).alias("mass"),
-                F.coalesce(F.max(mn), F.lit(0)).alias("max_new"),
-                F.coalesce(F.max(mo), F.lit(0)).alias("max_old"),
-                F.count(F.lit(1)).alias("n_buckets"),
+    with persisted(sigs, banded_new):
+        telemetry = None
+        if max_candidate_pairs is not None:
+            new_cnt = banded_new.groupBy("band", "bucket").agg(
+                F.count(F.lit(1)).alias("m_new")
             )
-            .collect()[0]
-        )
-        telemetry = {
-            "candidate_mass": int(stat["mass"]),
-            "n_buckets": int(stat["n_buckets"]),
-            "max_new": int(stat["max_new"]),
-            "max_old": int(stat["max_old"]),
-        }
-        if telemetry["candidate_mass"] > max_candidate_pairs:
-            sigs.unpersist()
-            banded_new.unpersist()
-            raise RuntimeError(
-                f"LSH ingest candidate budget exceeded: "
-                f"{telemetry['candidate_mass']} candidate pairs (budget "
-                f"{max_candidate_pairs}) for this shard at banding "
-                f"{bands} bands x {rows} rows, threshold {threshold} "
-                f"(largest shard bucket {telemetry['max_new']}, largest "
-                f"colliding index bucket {telemetry['max_old']}). The "
-                f"shard is boilerplate-heavy for this banding — re-band "
-                f"(fewer/wider bands), pre-clean the shard, or raise "
-                f"the budget."
+            # count_distinct: duplicate index rows (benign replayed-append
+            # residue, see the loud-guard comment below) must not inflate mass
+            old_cnt = idx_bands.groupBy("band", "bucket").agg(
+                F.count_distinct("id").alias("m_old")
             )
+            mn, mo = F.col("m_new"), F.coalesce(F.col("m_old"), F.lit(0))
+            stat = (
+                new_cnt.join(old_cnt, ["band", "bucket"], "left")
+                # mass-contributing buckets only (m_new·m_old + m_new·(m_new−1)/2
+                # > 0 ⇔ index collision or ≥2 shard members) — singleton shard
+                # buckets with zero candidate mass are excluded so n_buckets
+                # matches the batch guard's colliding-bucket semantics
+                .filter((mo >= 1) | (mn >= 2))
+                .agg(
+                    F.coalesce(
+                        F.sum(mn * mo + mn * (mn - 1) / 2), F.lit(0.0)
+                    ).alias("mass"),
+                    F.coalesce(F.max(mn), F.lit(0)).alias("max_new"),
+                    F.coalesce(F.max(mo), F.lit(0)).alias("max_old"),
+                    F.count(F.lit(1)).alias("n_buckets"),
+                )
+                .collect()[0]
+            )
+            telemetry = {
+                "candidate_mass": int(stat["mass"]),
+                "n_buckets": int(stat["n_buckets"]),
+                "max_new": int(stat["max_new"]),
+                "max_old": int(stat["max_old"]),
+            }
+            if telemetry["candidate_mass"] > max_candidate_pairs:
+                raise RuntimeError(
+                    f"LSH ingest candidate budget exceeded: "
+                    f"{telemetry['candidate_mass']} candidate pairs (budget "
+                    f"{max_candidate_pairs}) for this shard at banding "
+                    f"{bands} bands x {rows} rows, threshold {threshold} "
+                    f"(largest shard bucket {telemetry['max_new']}, largest "
+                    f"colliding index bucket {telemetry['max_old']}). The "
+                    f"shard is boilerplate-heavy for this banding — re-band "
+                    f"(fewer/wider bands), pre-clean the shard, or raise "
+                    f"the budget."
+                )
 
-    # vs the existing corpus: bucket join against the index, gram-verify.
-    # The index side arrives band-partitioned; only buckets colliding with
-    # the new shard survive the join (shuffle ∝ shard + matches).
-    cand_old = (
-        banded_new.select(F.col("id").alias("id_new"), "band", "bucket")
-        .join(
-            idx_bands.select(F.col("id").alias("id_old"), "band", "bucket"),
-            ["band", "bucket"],
+        # vs the existing corpus: bucket join against the index, gram-verify.
+        # The index side arrives band-partitioned; only buckets colliding with
+        # the new shard survive the join (shuffle ∝ shard + matches).
+        cand_old = (
+            banded_new.select(F.col("id").alias("id_new"), "band", "bucket")
+            .join(
+                idx_bands.select(F.col("id").alias("id_old"), "band", "bucket"),
+                ["band", "bucket"],
+            )
+            .select("id_new", "id_old")
+            .distinct()
         )
-        .select("id_new", "id_old")
-        .distinct()
-    )
-    # LEFT join + loud guard: a band entry whose gram row is missing means
-    # the index's two tables diverged (should be impossible with the
-    # grams-first write order — fail fast instead of silently passing the
-    # duplicate through). distinct() tolerates duplicate gram rows, the
-    # benign residue of a replayed append.
-    pairs_old = (
-        cand_old.join(
-            sigs.select(
-                F.col("id").alias("id_new"),
-                F.col("grams").alias("ga"),
-                F.col("fp").alias("fpa"),
-            ),
-            "id_new",
-        )
-        .join(
-            idx_grams.select(
-                F.col("id").alias("id_old"),
-                F.col("grams").alias("gb"),
-                F.col("fp").alias("fpb"),
-            ),
-            "id_old",
-            "left",
-        )
-        .filter(
-            # assert_true returns NULL when the predicate holds and raises
-            # otherwise; as a FILTER predicate it sits in the data path,
-            # so column pruning can't optimize the check away.
-            F.assert_true(
-                F.col("gb").isNotNull(),
-                F.concat(
-                    F.lit(
-                        "LSH index corrupt: band entry without grams for id "
-                    ),
-                    F.col("id_old").cast("string"),
+        # LEFT join + loud guard: a band entry whose gram row is missing means
+        # the index's two tables diverged (should be impossible with the
+        # grams-first write order — fail fast instead of silently passing the
+        # duplicate through). distinct() tolerates duplicate gram rows, the
+        # benign residue of a replayed append.
+        pairs_old = (
+            cand_old.join(
+                sigs.select(
+                    F.col("id").alias("id_new"),
+                    F.col("grams").alias("ga"),
+                    F.col("fp").alias("fpa"),
                 ),
-            ).isNull()
+                "id_new",
+            )
+            .join(
+                idx_grams.select(
+                    F.col("id").alias("id_old"),
+                    F.col("grams").alias("gb"),
+                    F.col("fp").alias("fpb"),
+                ),
+                "id_old",
+                "left",
+            )
+            .filter(
+                # assert_true returns NULL when the predicate holds and raises
+                # otherwise; as a FILTER predicate it sits in the data path,
+                # so column pruning can't optimize the check away.
+                F.assert_true(
+                    F.col("gb").isNotNull(),
+                    F.concat(
+                        F.lit(
+                            "LSH index corrupt: band entry without grams for id "
+                        ),
+                        F.col("id_old").cast("string"),
+                    ),
+                ).isNull()
+            )
+            .withColumn(
+                "jac",
+                _verify_jaccard(F.col("ga"), F.col("gb"), F.col("fpa"), F.col("fpb")),
+            )
+            .filter(F.col("jac") >= threshold)
+            .select("id_new", "id_old")
+            .distinct()
         )
-        .withColumn(
-            "jac",
-            _verify_jaccard(F.col("ga"), F.col("gb"), F.col("fpa"), F.col("fpb")),
+
+        # within the shard: the batch pipeline on the new docs only
+        la, lb = banded_new.alias("a"), banded_new.alias("b")
+        cand_new = (
+            la.join(lb, ["band", "bucket"])
+            .filter(F.col("a.id") < F.col("b.id"))
+            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+            .distinct()
         )
-        .filter(F.col("jac") >= threshold)
-        .select("id_new", "id_old")
-        .distinct()
-    )
-
-    # within the shard: the batch pipeline on the new docs only
-    la, lb = banded_new.alias("a"), banded_new.alias("b")
-    cand_new = (
-        la.join(lb, ["band", "bucket"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    ga = sigs.select(
-        F.col("id").alias("id_a"),
-        F.col("grams").alias("grams_a"),
-        F.col("fp").alias("fp_a"),
-    )
-    gb = sigs.select(
-        F.col("id").alias("id_b"),
-        F.col("grams").alias("grams_b"),
-        F.col("fp").alias("fp_b"),
-    )
-    pairs_new = (
-        cand_new.join(ga, "id_a")
-        .join(gb, "id_b")
-        .withColumn(
-            "jac",
-            _verify_jaccard(
-                F.col("grams_a"), F.col("grams_b"),
-                F.col("fp_a"), F.col("fp_b"),
-            ),
+        ga = sigs.select(
+            F.col("id").alias("id_a"),
+            F.col("grams").alias("grams_a"),
+            F.col("fp").alias("fp_a"),
         )
-        .filter(F.col("jac") >= threshold)
-        .select("id_a", "id_b")
-        .distinct()
-    )
+        gb = sigs.select(
+            F.col("id").alias("id_b"),
+            F.col("grams").alias("grams_b"),
+            F.col("fp").alias("fp_b"),
+        )
+        pairs_new = (
+            cand_new.join(ga, "id_a")
+            .join(gb, "id_b")
+            .withColumn(
+                "jac",
+                _verify_jaccard(
+                    F.col("grams_a"), F.col("grams_b"),
+                    F.col("fp_a"), F.col("fp_b"),
+                ),
+            )
+            .filter(F.col("jac") >= threshold)
+            .select("id_a", "id_b")
+            .distinct()
+        )
 
-    # pin the (small) pair sets eagerly so downstream consumers and the
-    # index append don't re-run the joins; release the signature caches
-    pairs_old = pairs_old.localCheckpoint(eager=True)
-    pairs_new = pairs_new.localCheckpoint(eager=True)
+        # pin the (small) pair sets eagerly: downstream consumers and the
+        # index append must not re-run the joins once the caches are gone
+        pairs_old = pairs_old.localCheckpoint(eager=True)
+        pairs_new = pairs_new.localCheckpoint(eager=True)
 
-    dropped = pairs_old.select(F.col("id_new").alias(id_col)).unionByName(
-        pairs_new.select(F.col("id_b").alias(id_col))
-    )
-    survivors = new_docs.join(dropped, id_col, "left_anti")
+        dropped = pairs_old.select(F.col("id_new").alias(id_col)).unionByName(
+            pairs_new.select(F.col("id_b").alias(id_col))
+        )
+        survivors = new_docs.join(dropped, id_col, "left_anti")
 
-    if update_index:
-        surv_ids = survivors.select(F.col(id_col).alias("id"))
-        keep_sigs = sigs.join(surv_ids, "id", "left_semi").persist()
-        _write_index_state(keep_sigs, index_path, bands, rows, "append")
-        keep_sigs.unpersist()
+        if update_index:
+            surv_ids = survivors.select(F.col(id_col).alias("id"))
+            keep_sigs = sigs.join(surv_ids, "id", "left_semi")
+            with persisted(keep_sigs):
+                _write_index_state(keep_sigs, index_path, bands, rows, "append")
 
-    sigs.unpersist()
-    banded_new.unpersist()
     return {
         "pairs_old": pairs_old,
         "pairs_new": pairs_new,

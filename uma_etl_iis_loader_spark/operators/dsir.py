@@ -73,17 +73,6 @@ def _gram_rows_sql(id_col: str, text_col: str, rel: str) -> str:
     )
 
 
-def _gram_rows(docs: DataFrame, id_col: str, text_col: str):
-    """Explode each doc into one row per unigram+bigram OCCURRENCE
-    (counts matter — no distinct): lowercased whitespace tokens, empty
-    tokens filtered (split('') yields [''] — the phantom-word trap).
-    Docs with no tokens produce no rows, and are absent from scores —
-    same contract as ``lm.score_perplexity`` for sub-trigram docs."""
-    return docs.sparkSession.sql(
-        _gram_rows_sql(id_col, text_col, "{docs}"), docs=docs
-    )
-
-
 def _featurize(grams, num_buckets: int | None, portable: bool = False):
     """Feature key per gram row: by default an 8-byte ``xxhash64`` of
     the gram (the ``contamination`` recipe — count aggregations and the

@@ -228,16 +228,6 @@ class _BitWriter:
         return bytes(self.buf)
 
 
-def _magnitude(v: int):
-    """(category, amplitude bits) for a DC diff / AC coefficient."""
-    if v == 0:
-        return 0, 0
-    a = abs(v)
-    cat = a.bit_length()
-    bits = v if v > 0 else v + (1 << cat) - 1
-    return cat, bits
-
-
 def _encode_block(wtr, zz, ti, pred, ci, dc_codes, ac_codes) -> None:
     """Entropy-code one zigzagged quantized block (DC diff + AC RLE).
 
@@ -660,7 +650,9 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
     # `dbits - (fed - nacc)` is exactly the real bits still unconsumed;
     # any symbol/amplitude that would consume past that is the old
     # reader's "exhausted" error, and an all-gap 16-bit window with real
-    # bits left is its "invalid code" error.
+    # bits left is its "invalid code" error. Consumed bits are masked off
+    # before every refill, so `acc` stays under 32 bits: unmasked, it
+    # grows with the scan and every shift costs O(scan) — O(N²) decode.
     mcu = 0
     for interval in intervals:
         if mcu >= n_mcus:
@@ -686,6 +678,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                     for bx in range(chh):
                         z = [0] * 64
                         # --- DC symbol
+                        acc &= (1 << nacc) - 1
                         while nacc < 16:
                             if pos < dlen:
                                 acc = (acc << 8) | data[pos]
@@ -710,6 +703,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                         if cat > 15:  # corrupt DHT values; spec max is 11
                             raise ValueError("invalid DC category")
                         if cat:
+                            acc &= (1 << nacc) - 1
                             while nacc < cat:
                                 if pos < dlen:
                                     acc = (acc << 8) | data[pos]
@@ -733,6 +727,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                         k = 1
                         while k < 64:
                             # --- AC symbol
+                            acc &= (1 << nacc) - 1
                             while nacc < 16:
                                 if pos < dlen:
                                     acc = (acc << 8) | data[pos]
@@ -770,6 +765,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                             if cat > 10:  # spec max for baseline AC
                                 raise ValueError("invalid AC category")
                             if cat:
+                                acc &= (1 << nacc) - 1
                                 while nacc < cat:
                                     if pos < dlen:
                                         acc = (acc << 8) | data[pos]

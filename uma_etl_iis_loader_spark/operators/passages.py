@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .lifetime import persisted
+
 
 def shingle_positions(
     docs: DataFrame,
@@ -59,6 +61,26 @@ def shingle_positions(
         F.explode(F.sequence(F.lit(0), F.col("n") - k)).alias("pos"),
         "ws",
     ).select("id", "pos", key.alias("key"))
+
+
+def _mark(sh: DataFrame, rep_keys: DataFrame) -> DataFrame:
+    """(id, pos, rep): each shingle position flagged iff its key is in
+    ``rep_keys`` — the one marking join behind both faces."""
+    rep = rep_keys.select("key").withColumn("__r", F.lit(True))
+    return sh.join(rep, "key", "left").select(
+        "id", "pos", F.coalesce(F.col("__r"), F.lit(False)).alias("rep")
+    )
+
+
+def _repeated_marks(sh: DataFrame, min_docs: int) -> DataFrame:
+    """Lazy batch marking over a shingle table: a window is repeated iff
+    its key occurs in ≥ ``min_docs`` distinct documents."""
+    rep = (
+        sh.groupBy("key")
+        .agg(F.count_distinct("id").alias("nd"))
+        .filter(F.col("nd") >= min_docs)
+    )
+    return _mark(sh, rep)
 
 
 def _marked_to_outputs(marked, k: int):
@@ -90,7 +112,6 @@ def repeated_passages(
     id_col: str = "doc_id",
     text_col: str = "text",
     hashed: bool = True,
-    pin: bool = True,
 ) -> dict[str, DataFrame]:
     """Cross-document exact repeated passages.
 
@@ -105,36 +126,22 @@ def repeated_passages(
 
     A window is repeated iff its key occurs in ≥ ``min_docs`` DISTINCT
     documents (within-doc self-repeats don't count — they're the
-    repetition signal quality_score already captures). ``pin``
-    checkpoints the marked-position table so stats and spans don't
-    re-run the corpus-wide shuffle twice.
+    repetition signal quality_score already captures). The marked-
+    position table is checkpointed so stats and spans don't re-run the
+    corpus-wide shuffle twice.
     """
     sh = shingle_positions(docs, k, id_col, text_col, hashed)
-    if pin:
-        # the tokenize+explode subtree (one row per corpus token) feeds
-        # both the df-count aggregation and the mark join: persist it so
-        # the dominant cost runs once, release after the checkpoint
-        sh = sh.persist()
-    rep = (
-        sh.groupBy("key")
-        .agg(F.count_distinct("id").alias("nd"))
-        .filter(F.col("nd") >= min_docs)
-        .select("key")
-        .withColumn("__r", F.lit(True))
-    )
-    marked = sh.join(rep, "key", "left").select(
-        "id", "pos", F.coalesce(F.col("__r"), F.lit(False)).alias("rep")
-    )
-    if pin:
-        # localCheckpoint, NOT persist+count: marked is corpus-sized (one
-        # row per token window), so a collect-to-local is off the table
-        # and a session-lifetime cache would tax every later query's
-        # analysis (CacheManager matches each new plan against every
-        # cached plan — measured r12). The RDD-path checkpoint loses
-        # AQE's runtime broadcast of the mark join, but truncates the
-        # lineage to a leaf for both downstream consumers.
-        marked = marked.localCheckpoint(eager=True)
-        sh.unpersist()
+    # the tokenize+explode subtree (one row per corpus token) feeds both
+    # the df-count aggregation and the mark join: held so the dominant
+    # cost runs once. localCheckpoint for the marks, NOT a cache: marked
+    # is corpus-sized (one row per token window), so a collect-to-local
+    # is off the table and a session-lifetime cache would tax every later
+    # query's analysis (CacheManager matches each new plan against every
+    # cached plan — measured r12). The checkpoint loses AQE's runtime
+    # broadcast of the mark join, but truncates the lineage to a leaf
+    # for both downstream consumers.
+    with persisted(sh):
+        marked = _repeated_marks(sh, min_docs).localCheckpoint(eager=True)
     return _marked_to_outputs(marked, k)
 
 
@@ -180,7 +187,6 @@ def passages_increment(
     id_col: str = "doc_id",
     text_col: str = "text",
     update_index: bool = True,
-    pin: bool = True,
 ) -> dict[str, DataFrame]:
     """Repeated-passage detection for a NEWLY LANDED shard against the
     persisted corpus index + the shard itself.
@@ -194,61 +200,41 @@ def passages_increment(
     Scale: the shard is tokenized once; the index join ships 8-byte
     keys; corpus text is never touched. ``update_index=True`` appends
     the shard's (key, nd) rows AFTER computing the outputs (the marked
-    table is pinned first, so the lazy plans can't observe the shard's
-    own append — same discipline as dedup_increment).
+    table is checkpointed first, so the outputs can't observe the
+    shard's own append — same discipline as dedup_increment).
 
     Replay semantics: re-appending the same shard inflates nd counts,
     which can only flip windows TOWARD "repeated" (conservative: more
     flagged, never lost passages). For exactly-once ingestion wrap the
     call in a committed-batch marker like streaming/cdc's
     DedupIngestMaintainer does for the LSH index."""
-    if update_index and not pin:
-        raise ValueError(
-            "update_index=True requires pin=True: unpinned (lazy) outputs "
-            "re-read the index after the append and would see the shard's "
-            "own keys, marking every window repeated"
-        )
+    from .index_pointer import resolve_table, writer_guard
+
     spark = new_docs.sparkSession
     sh = shingle_positions(new_docs, k, id_col, text_col, hashed=True)
-    if pin:
-        # shard tokenized ONCE: the shingle table feeds the nd_new
-        # aggregation, the mark join, and (via nd_new) the index append
-        sh = sh.persist()
     nd_new = sh.groupBy("key").agg(F.count_distinct("id").alias("nd_new"))
-    from .index_pointer import resolve_table
-
     idx = (
         spark.read.parquet(resolve_table(index_path, "keys"))
         .groupBy("key")
         .agg(F.sum("nd").alias("nd_old"))
     )
-    rep = (
-        nd_new.join(idx, "key", "left")
-        .filter(
-            F.col("nd_new") + F.coalesce(F.col("nd_old"), F.lit(0))
-            >= min_docs
+    rep = nd_new.join(idx, "key", "left").filter(
+        F.col("nd_new") + F.coalesce(F.col("nd_old"), F.lit(0)) >= min_docs
+    )
+    # shard tokenized ONCE: the shingle table feeds the nd_new
+    # aggregation, the mark join, and (via nd_new) the index append
+    with persisted(sh):
+        marked = _mark(sh, rep).localCheckpoint(eager=True)
+        if update_index:
+            writer_guard(index_path, "keys")
+            nd_new.withColumnRenamed("nd_new", "nd").write.mode(
+                "append"
+            ).parquet(resolve_table(index_path, "keys"))
+        nd_out = nd_new.withColumnRenamed("nd_new", "nd").localCheckpoint(
+            eager=True
         )
-        .select("key")
-        .withColumn("__r", F.lit(True))
-    )
-    marked = sh.join(rep, "key", "left").select(
-        "id", "pos", F.coalesce(F.col("__r"), F.lit(False)).alias("rep")
-    )
-    if pin:
-        marked = marked.localCheckpoint(eager=True)
-    if update_index:
-        from .index_pointer import writer_guard
-
-        writer_guard(index_path, "keys")
-        nd_new.withColumnRenamed("nd_new", "nd").write.mode(
-            "append"
-        ).parquet(resolve_table(index_path, "keys"))
-    nd_out = nd_new.withColumnRenamed("nd_new", "nd")
-    if pin:
-        nd_out = nd_out.localCheckpoint(eager=True)
-        sh.unpersist()
     out = _marked_to_outputs(marked, k)
-    # the shard's own (key, nd) rows — computed from the SAME persisted
+    # the shard's own (key, nd) rows — computed from the SAME held
     # shingle table, so callers that manage the index append themselves
     # (streaming/cdc.PassagesIngestMaintainer's idempotent single-file
     # append) don't re-tokenize the shard

@@ -42,7 +42,7 @@ def _union_all(*dfs: DataFrame) -> DataFrame:
 # exact dedup — canonical-form fingerprint
 # ---------------------------------------------------------------------------
 
-_CANON_SQL = "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))"
+_CANON_SQL = r"trim(regexp_replace(lower(text), '[^\p{L}\p{N}]+', ' ', 'g'))"
 
 _EXACT_DEDUP_ORACLE = f"""
 SELECT md5({_CANON_SQL}) AS fingerprint,
@@ -95,8 +95,7 @@ WHERE CAST(shared AS DOUBLE) / (sa.sz + sb.sz - shared) >= 0.35
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard pairs ≥ 0.35.
 
-    The registered path is threshold-ADAPTIVE (prefix_filter=None):
-    ngram_jaccard_pairs picks PPJoin prefix filtering at t ≥ 0.6 (short
+    The registered path is threshold-ADAPTIVE: ngram_jaccard_pairs picks PPJoin prefix filtering at t ≥ 0.6 (short
     prefix, posting-list pruning wins — the hot-gram 100 TB path) and the
     naive inverted-index count below (at t=0.35 the prefix is ~65% of
     each doc's grams, so pruning can't pay for its shuffles). Selection
@@ -139,10 +138,9 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     - 'exact' pair rows, cosine ≥ 0.45 (ids only — float noise stays
       internal). Tiled exact block-matmul self-join: shuffles n·blocks
       replicated vectors instead of materializing n²/2 crossJoin pair
-      rows (equivalence to the crossJoin path pytest-pinned in
+      rows (equivalence to a crossJoin reference pytest-pinned in
       tests/test_dedup.py). At t=0.45 on near-orthogonal embeddings LSH
-      has no recall/pruning headroom, so the exact path must scale; the
-      SRP-banded approximate path is the high-threshold ladder rung.
+      has no recall/pruning headroom, so the exact path must scale.
     - one 'semantic_subset_ok' property row (id_a=-1): id_b=1 iff every
       cluster-scoped semantic_dedup pair at the same threshold is in the
       exact pair set — the containment law the SemDeDup recipe promises
@@ -155,7 +153,7 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = read_fixture(spark, sf_dir, "embeddings")
     exact = embedding_cosine_pairs(
-        emb, threshold=0.45, method="tiled", blocks=8
+        emb, threshold=0.45, blocks=8
     )
     sem = semantic_dedup(emb, n_clusters=8, threshold=0.45)["pairs"]
     subset_ok = (
@@ -1950,9 +1948,7 @@ def q_dedup_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import canonical_per_cluster, connected_components
 
     docs = read_fixture(spark, sf_dir, "documents")
-    exact = ngram_jaccard_pairs(
-        docs, n=3, threshold=0.35, char_level=False, prefix_filter=False
-    )
+    exact = ngram_jaccard_pairs(docs, n=3, threshold=0.35, char_level=False)
     mh = minhash_lsh_pairs(
         docs, num_hashes=64, bands=16, n=3, threshold=0.35, char_level=False
     )
